@@ -31,7 +31,7 @@ object SparkEnv {
     val tmp = new java.io.File(base, "graft_tmp")
     tmp.mkdirs()
     // Streaming temp checkpoints resolve through java.io.tmpdir at
-    // writeStream time, so setting it here (pre-session) is enough.
+    // streaming-query start, so setting it here (pre-session) is enough.
     System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -54,11 +54,12 @@ object SparkEnv {
       // on any real corpus.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1000000")
-      // Engine default, found by measurement (LayoutSkipProbe): Spark
-      // still WRITES parquet timestamps as deprecated INT96 by default,
-      // and INT96 carries no pushdown-usable statistics — so row-group
-      // pruning on a time column is silently impossible for anything
-      // this engine writes, no matter how well the data is laid out.
+      // Engine default, found by measurement (PLANS.md, "the INT96
+      // finding"): Spark still WRITES parquet timestamps as deprecated
+      // INT96 by default, and INT96 carries no pushdown-usable
+      // statistics — so row-group pruning on a time column is silently
+      // impossible for anything this engine writes, no matter how well
+      // the data is laid out.
       // INT64 micros restores min/max stats (9x scan reduction on the
       // sorted-layout probe) and is what every modern reader expects.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -66,5 +67,25 @@ object SparkEnv {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Run `body` with `confs` set on the session, then restore every key
+    * to exactly its prior state: re-set to its old value if it had one,
+    * unset if it had none. The prior state is read from the session's
+    * explicit settings (`conf.getAll`), not `conf.getOption`, which
+    * reports a registered default for an unset key — restoring that
+    * would pin the default as an explicit setting. Session confs are
+    * session-global, so this assumes the session runs one query at a
+    * time (Verify/Bench do); a concurrent caller passes its own
+    * `s.newSession()`. */
+  def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
+    val explicit = s.conf.getAll
+    val prior = confs.keys.map(k => k -> explicit.get(k))
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 }

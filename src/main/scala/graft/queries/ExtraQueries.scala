@@ -297,7 +297,14 @@ object ExtraQueries {
     * The spread HASHES on a caller-supplied high-cardinality key
     * instead of round-robin: keyless repartition first pays a local
     * sort of its input (sortBeforeRepartition, guide §2.5) — measured
-    * 1.27 vs 1.00 s on the spread alone, census 1.66 vs 1.29 s. */
+    * 1.27 vs 1.00 s on the spread alone, census 1.66 vs 1.29 s.
+    *
+    * PRECONDITION: `df` must be exchange-free (a scan plus narrow
+    * operators). The check reads `df.rdd.getNumPartitions`, which for
+    * an exchange-free plan is just the scan's split count, planned on
+    * the driver with no job. Over an exchange it would instead be the
+    * post-shuffle partition count, and under AQE building that RDD
+    * runs the upstream shuffle stages eagerly. */
   private def spreadIfNarrow(df: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
@@ -343,7 +350,7 @@ object ExtraQueries {
     * stacked 1.71–1.93 s full, 1.38 s when downstream prunes to the
     * nd column (the gate's case — Catalyst drops unused agg
     * expressions once the explode indirection is gone, which the wide
-    * shape's struct-array explode defeated; ProfileApproxProbe).
+    * shape's struct-array explode defeated; OPTIMIZATION_r18.md).
     * The HLL hashes a pre-hashed xxhash64 value: cardinality is
     * preserved (64-bit collisions are ~n²/2⁶⁵ — immaterial next to
     * the 2% rsd), null cells stay skipped (h is null iff the value
@@ -856,17 +863,10 @@ object ExtraQueries {
   }
 
   /** Run `body` with auto-broadcast disabled, restoring the previous
-    * threshold on exit (the StreamQueries scoped-conf protocol). */
-  private[graft] def withoutBroadcast[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "-1")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+    * threshold (set or unset) on exit. */
+  private[graft] def withoutBroadcast[A](s: SparkSession)(body: => A): A =
+    graft.SparkEnv.withConfs(s,
+      Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   /** Morton/Z-order bit-spread of the low 16 bits of a key: the
     * classic shift-or-mask cascade (0x00FF00FF / 0x0F0F0F0F /

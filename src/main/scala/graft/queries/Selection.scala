@@ -131,7 +131,9 @@ object Selection {
     * rank k then means "the smallest value whose CUMULATIVE WEIGHT
     * reaches k" — the weighted-median/percentile kernel (weights must
     * be non-negative longs; the default lit(1L) is bit-identical to
-    * the unweighted behavior since sum(1) = count). */
+    * the unweighted behavior since sum(1) = count). A null weight
+    * counts as 0; a negative weight in a requested group fails the
+    * census pass with an IllegalArgumentException. */
   def groupedKth(df: DataFrame, grp: String, c: String,
       ranks: Map[String, Seq[Long]], buckets: Int = 1 << 14,
       weight: Column = lit(1L))
@@ -148,10 +150,16 @@ object Selection {
     // below): driver memory is O(|ranks|) even when the relation's
     // group domain is high-cardinality.
     val wanted = ranks.keySet.toSeq
+    val wt = coalesce(weight, lit(0L))
     val mm = df.filter(col(grp).isin(wanted: _*))
-      .groupBy(col(grp)).agg(min(col(c)), max(col(c)), sum(weight))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
-        r.getLong(3))).toMap
+      .groupBy(col(grp)).agg(min(col(c)), max(col(c)), sum(wt), min(wt))
+      .collect().map { r =>
+        val g = r.getString(0)
+        require(r.getLong(4) >= 0L,
+          s"groupedKth weights must be non-negative; group $g has " +
+            s"weight ${r.getLong(4)}")
+        g -> (r.getLong(1), r.getLong(2), r.getLong(3))
+      }.toMap
     val states = ranks.toSeq.flatMap { case (g, ks) =>
       val (mn, mx, n) = mm.getOrElse(g,
         sys.error(s"group $g absent from the relation"))
@@ -166,7 +174,7 @@ object Selection {
       .map(_.g).distinct
     if (straddling.nonEmpty) {
       val negs = df.filter(col(grp).isin(straddling: _*) && col(c) < 0)
-        .groupBy(col(grp)).agg(sum(weight)).collect()
+        .groupBy(col(grp)).agg(sum(wt)).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       states.filter(s => s.lo < 0 && s.hi >= 0).foreach { s =>
         val neg = negs.getOrElse(s.g, 0L)
@@ -186,7 +194,7 @@ object Selection {
       // Row fan-out is ≤ states-per-group (≤R, tiny); the (sid, bucket)
       // partial aggregate collapses map-side before the one exchange.
       val counts = df.select(col(grp).as("g"), col(c).as("v"),
-          weight.as("wt"))
+          wt.as("wt"))
         .join(stDf, Seq("g"))
         .filter(col("v") >= col("lo") && col("v") <= col("hi"))
         .select(col("sid"), expr("(v - lo) div w").as("b"), col("wt"))

@@ -1,9 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
+  Executors, TimeUnit, TimeoutException}
+import scala.concurrent.duration.FiniteDuration
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 import graft.Tables.t
 
 /** q_stream_batch: the Structured Streaming variant of the reference's
@@ -87,92 +91,98 @@ object StreamQueries {
     * micro-batches OFF (the trailing empty batch only advances the
     * watermark to evict state / emit append-mode finals; the
     * complete-mode and inner-join gates get nothing from it and pay a
-    * full state-store reload+recommit). The RocksDB provider was
-    * evaluated and rejected for the gate config: >=8.6s in its quietest
-    * window — its native per-store constants (open, changelog,
-    * checkpoint sync) only pay off with restart tolerance or
-    * larger-than-memory state, neither of which a finite AvailableNow
-    * gate has. Found via per-batch progress probes — see PLANS.md. */
-  private def withStreamGateConfs[T](s: SparkSession)(run: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val initKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prevProvider = s.conf.getOption(providerKey)
-    val prevInit = s.conf.getOption(initKey)
-    // Experiment overrides (bench A/B only; the committed defaults are
-    // the measured-fastest gate config). A tmpfs checkpoint dir was
-    // also A/B'd here and removed: interleaved on/off pairs measured no
-    // win (the per-batch WAL on local ext4 is not the bottleneck).
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    // AQE's initialPartitionNum (session default: 8x cores) OVERRIDES
-    // shuffle.partitions while coalescing is on — without scoping it
-    // too, every foreachBatch plan's exchange still fanned to 256
-    // map-side partitions and the measured "4 parts" knee never
-    // actually applied to the batch sinks (r19; the withIterParts
-    // lesson). Same restore discipline as the other keys. The sysprop
-    // is the interleaved-A/B escape hatch ("off" = leave the session
-    // default), probe-only.
-    sys.props.get("graft.stream.initparts").getOrElse(parts) match {
-      case "off" => ()
-      case v => s.conf.set(initKey, v)
+    * full state-store reload+recommit). AQE's initialPartitionNum
+    * (session default: 8x cores) OVERRIDES shuffle.partitions while
+    * coalescing is on — without scoping it too, every foreachBatch
+    * plan's exchange still fanned to 256 map-side partitions and the
+    * "4 parts" knee never applied to the batch sinks (r19; the
+    * withIterParts lesson). The RocksDB provider was evaluated and
+    * rejected for the gate config: >=8.6s in its quietest window — its
+    * native per-store constants (open, changelog, checkpoint sync) only
+    * pay off with restart tolerance or larger-than-memory state,
+    * neither of which a finite AvailableNow gate has; at 100 TB the
+    * production posture IS RocksDB, set through Spark's own
+    * `spark.sql.streaming.stateStore.providerClass` (RocksDbStateSpec
+    * pins result identity under it). Found via per-batch progress
+    * probes — see PLANS.md. A tmpfs checkpoint dir was also A/B'd and
+    * removed: interleaved on/off pairs measured no win. */
+  private val StreamGateConfs = Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "4",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** The one streaming-gate runner: run `stream` to completion under
+    * the gate confs with a finite AvailableNow trigger. `sink`
+    * configures the writer (foreachBatch + checkpoint, or a memory
+    * sink); the started query is returned after it terminates, so a
+    * caller can read its progress. */
+  private def runGate(s: SparkSession, stream: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
+    graft.SparkEnv.withConfs(s, StreamGateConfs) {
+      val q = sink(stream.writeStream).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
     }
-    // Probe-only A/B seam: AQE off across the gate's batch plans.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey, "true")
-    if (sys.props.get("graft.stream.aqe").contains("off"))
-      s.conf.set(aqeKey, "false")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // Provider override: sysprop (in-JVM specs — RocksDbStateSpec
-    // asserts provider-independence of gate results) before env (bench
-    // A/B). At 100 TB state the production posture IS RocksDB
-    // (larger-than-heap state, restart tolerance); the gate default
-    // stays HDFS-backed only because a finite AvailableNow gate never
-    // amortizes RocksDB's native per-store constants (measured, see
-    // scaladoc above).
-    sys.props.get("graft.stream.state.provider").filter(_.nonEmpty)
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-        .filter(_.nonEmpty))
-      .foreach(s.conf.set(providerKey, _))
-    try run
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
-      prevProvider match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
-      }
-      prevInit match {
-        case Some(v) => s.conf.set(initKey, v)
-        case None => s.conf.unset(initKey)
-      }
-      s.conf.set(aqeKey, prevAqe)
-    }
+
+  /** Run a foreachBatch gate: `batch(df, batchId)` per micro-batch,
+    * checkpointed under `$root/ckpt`. `root` is wiped first — restart
+    * semantics are the replay specs' subject; the gate needs a fresh,
+    * deterministic end state on every invocation. */
+  private def runBatches(s: SparkSession, stream: DataFrame, root: String)(
+      batch: (DataFrame, Long) => Unit): Unit = {
+    graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
+    runGate(s, stream)(_.foreachBatch(batch)
+      .option("checkpointLocation", s"$root/ckpt"))
+    ()
   }
+
+  /** Run a stateful gate into the in-memory table `name` (read back
+    * with `s.table(name)`); complete mode unless `mode` says otherwise. */
+  private def runToMemory(s: SparkSession, stream: DataFrame, name: String,
+      mode: String = "complete"): StreamingQuery =
+    runGate(s, stream)(_.format("memory").queryName(name).outputMode(mode))
+
+  /** The parquet dump at `srcDir` as a file stream admitting one file
+    * per micro-batch (the per-batch sinks' source shape). */
+  private def oneFilePerBatch(s: SparkSession, srcDir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(srcDir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+
+  /** Upper bound on one overlap() call: every write shares it. */
+  private val OverlapDeadline = FiniteDuration(15, TimeUnit.MINUTES)
 
   /** Run INDEPENDENT per-batch write actions concurrently (guide §2.6
     * overlap — 2-3 jobs in flight back-fill each other's scheduling +
-    * file-commit tails; BatchFloorProbe r19: a tiny single-file write
+    * file-commit tails; OPTIMIZATION_r19.md: a tiny single-file write
     * action costs ~110 ms of mostly serial driver/commit floor, so a
     * sink with k independent writes pays ~k× that serially). Blocks
-    * until all complete; the first failure propagates so foreachBatch
-    * fails the batch loudly and the replay re-runs it whole. */
-  private def overlap(actions: (() => Unit)*): Unit =
+    * until all complete, against ONE deadline shared by every action.
+    * The first failure (or the deadline) interrupts the remaining
+    * writes and waits for the workers to stop before it propagates, so
+    * no write outlives its micro-batch; foreachBatch then fails the
+    * batch loudly and the replay re-runs it whole. */
+  private[graft] def overlap(actions: (() => Unit)*): Unit =
+    overlapWithin(OverlapDeadline)(actions: _*)
+
+  /** overlap() with an explicit shared deadline (OverlapSpec uses a
+    * short one). */
+  private[graft] def overlapWithin(deadline: FiniteDuration)(
+      actions: (() => Unit)*): Unit =
     if (actions.lengthCompare(2) < 0) actions.foreach(_.apply())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(3, actions.length))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        actions.map(a => Future(a()))
-          .foreach(Await.result(_, Duration(15, "min")))
-      } finally pool.shutdown()
+      val pool = Executors.newFixedThreadPool(math.min(3, actions.length))
+      val done = new ExecutorCompletionService[Unit](pool)
+      actions.foreach(a => done.submit(() => a()))
+      val end = System.nanoTime + deadline.toNanos
+      try actions.indices.foreach { _ =>
+        val f = done.poll(end - System.nanoTime, TimeUnit.NANOSECONDS)
+        if (f == null) throw new TimeoutException(
+          s"overlap: writes still running after $deadline")
+        try f.get() catch { case e: ExecutionException => throw e.getCause }
+      } finally {
+        pool.shutdownNow()
+        pool.awaitTermination(1, TimeUnit.MINUTES)
+      }
     }
 
   /** The per-micro-batch observation plan: batch collapsed map-side on
@@ -307,11 +317,7 @@ object StreamQueries {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .count()
-    withStreamGateConfs(s) {
-      val q = stream.writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    runToMemory(s, stream, qn)
     s.table(qn)
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
@@ -362,14 +368,8 @@ object StreamQueries {
     * of batches. Batch-SIZED artifacts (cdc deltas, zonemap data,
     * dedup index entries) keep their parallel layout — single-tasking
     * those would serialize real data volume. */
-  private def writePartial(df: DataFrame, dir: String): Unit = {
-    // A/B escape hatch for the per-commit floor measurement only
-    // (PLANS.md "Streaming per-commit constant"): the committed
-    // default is the single-file partial.
-    val d = if (sys.env.contains("SPARK_GRAFT_PARTIAL_NOCOALESCE")) df
-            else df.coalesce(1)
-    d.write.mode("overwrite").parquet(dir)
-  }
+  private def writePartial(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
 
   /** One micro-batch of the streaming quantile sink
     * (q_stream_quantile): fold THIS batch's events to a (day, cents)
@@ -1159,11 +1159,7 @@ object StreamQueries {
         val stream = s.readStream.schema(schema).parquet(srcDir)
           .groupBy(sha2(col("text"), 256).as("fp"))
           .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runToMemory(s, stream, qn)
         s.table(qn).select("doc_id", "n_copies").orderBy("doc_id")
       },
       """SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
@@ -1191,20 +1187,8 @@ object StreamQueries {
             .repartition(4))
         val baseIdx = s.read.parquet(TextQueries.ensureDigestIndex(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sdinc_$tag"
-        // Fresh run per gate invocation: restart semantics are the
-        // spec's subject; the gate needs a deterministic end state.
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => incDedupBatch(b, baseIdx, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => incDedupBatch(b, baseIdx, root, id))
         s.read.parquet(s"$root/obs")
           .groupBy("digest")
           .agg(min("doc_id").as("doc_id"), sum("n_copies").as("n_copies"))
@@ -1251,18 +1235,8 @@ object StreamQueries {
         // that window is ~50 ms over the dimension-sized index.
         val cappedBase = VectorQueries.cappedIndex(s.read.parquet(idxDir))
         val root = s"${graft.Tables.scratchRoot}/graft_sann_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => annIncBatch(b, cappedBase, bits, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => annIncBatch(b, cappedBase, bits, root, id))
         val cand = s.read.parquet(s"$root/obs")
           .select("qid", "nid").distinct()
         VectorQueries.rankCandidates(s, d, cand).orderBy("qid", "rn")
@@ -1288,18 +1262,8 @@ object StreamQueries {
           t(s, d, "orders").filter(col("o_orderkey") % 7 === 0)
             .repartition(4))
         val root = s"${graft.Tables.scratchRoot}/graft_smv_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => mvDeltaBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => mvDeltaBatch(b, root, id))
         val base = s.read.parquet(ExtraQueries.ensureOrdersMatview(s, d))
           .select("o_custkey", "n_orders", "cents")
         val deltas = s.read.parquet(s"$root/delta")
@@ -1334,18 +1298,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_scdc_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cdcBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => cdcBatch(b, root, id))
         val w = Window.partitionBy("user_id")
           .orderBy(col("us").desc, col("event_id").desc)
         s.read.parquet(s"$root/delta")
@@ -1387,18 +1341,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val base = s"${graft.Tables.scratchRoot}/graft_supsert_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(base))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, _) => upsertBatch(s, b, base, "state")
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), base)(
+          (b, _) => upsertBatch(s, b, base, "state"))
         upsertState(s, base, "state")
           .filter(!col("deleted"))
           .select(col("user_id"), col("us").as("last_us"), col("val_e2"))
@@ -1440,18 +1384,8 @@ object StreamQueries {
             .repartitionByRange(4, col("ts"))
             .sortWithinPartitions("ts"))
         val root = s"${graft.Tables.scratchRoot}/graft_szone_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => zonemapBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => zonemapBatch(b, root, id))
         val manifest = s.read.parquet(s"$root/manifest").collect()
         val t0 = manifest.map(_.getAs[Long]("us_min")).min
         val lo = t0 + 7L * 86400000000L
@@ -1504,18 +1438,8 @@ object StreamQueries {
             .select("l_orderkey", "l_partkey")
             .repartition(4, col("l_orderkey")))
         val root = s"${graft.Tables.scratchRoot}/graft_sassoc_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => assocBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => assocBatch(b, root, id))
         s.read.parquet(s"$root/pairs")
           .groupBy("a", "b").agg(sum("c").as("co"))
           .filter(col("co") >= 2)
@@ -1551,18 +1475,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_squant_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => quantileHistBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => quantileHistBatch(b, root, id))
         ExtraQueries.quantileRollupPlan(s.read.parquet(s"$root/hist"))
       },
       ExtraQueries.QuantileRollupOracle)),
@@ -1587,18 +1501,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_skll_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => kllBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => kllBatch(b, root, id))
         ExtraQueries.kllAudit(
           ExtraQueries.kllEventView(s, d),
           ExtraQueries.kllRollupReport(s.read.parquet(s"$root/kll")))
@@ -1618,18 +1522,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sseas_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => seasonalBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => seasonalBatch(b, root, id))
         ExtraQueries.seasonalReport(
           s.read.parquet(s"$root/daily")
             .groupBy("event_type", "day")
@@ -1660,18 +1554,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_spii_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => piiBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => piiBatch(b, root, id))
         s.read.parquet(s"$root/pii")
           .groupBy("source")
           .agg(sum("n_docs").as("n_docs"),
@@ -1708,18 +1592,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sskew_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => skewBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => skewBatch(b, root, id))
         val folded = s.read.parquet(s"$root/skew")
           .groupBy("key", "k").agg(sum("f").as("f"))
         Seq("event_type", "user_id").map { lbl =>
@@ -1771,18 +1645,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sskewsk_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => skewSketchBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => skewSketchBatch(b, root, id))
         val folded = s.read.parquet(s"$root/mg")
           .groupBy("key")
           .agg(expr("mg_merge(summary, 64, 1)").as("top"),
@@ -1833,18 +1697,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_smix_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => mixBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => mixBatch(b, root, id))
         // ONE plan (r19, the q_mix_epochs lesson): the total rides a
         // whole-relation window over the source-domain fold instead of
         // a checkpoint + one-row agg + broadcast crossJoin — three
@@ -1896,18 +1750,8 @@ object StreamQueries {
             .mode("overwrite").parquet(srcDir)
         }
         val root = s"${graft.Tables.scratchRoot}/graft_spipe_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => pipelineBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => pipelineBatch(b, root, id))
         val ids = s.read.parquet(s"$root/ids")
         val edges = s.read.parquet(s"$root/edges")
         val link = graft.ingest.Flatten.keyEdges(edges, ids)
@@ -1938,18 +1782,8 @@ object StreamQueries {
         val tag = graft.Tables.dirTag(d)
         val srcDir = sharedLineitemDump(s, d)
         val root = s"${graft.Tables.scratchRoot}/graft_sexpect_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => expectBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => expectBatch(b, root, id))
         val sums = s.read.parquet(s"$root/sums")
           .agg(sum("null_orderkey").as("null_orderkey"),
             sum("qty_in_range").as("qty_in_range"),
@@ -1994,18 +1828,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_scap_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => capBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => capBatch(b, root, id))
         val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
         s.read.parquet(s"$root/cap")
           .withColumn("rank", row_number().over(w).cast("long"))
@@ -2029,17 +1853,8 @@ object StreamQueries {
         val tag = graft.Tables.dirTag(d)
         val dumpDir = FnQueries.ensureQuarantineDump(s, d)
         val root = s"${graft.Tables.scratchRoot}/graft_sqtn_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val stream = s.readStream
-          .option("maxFilesPerTrigger", "4").text(dumpDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => quarantineBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, s.readStream.option("maxFilesPerTrigger", "4")
+          .text(dumpDir), root)((b, id) => quarantineBatch(b, root, id))
         // One driver scalar (the batch gate's own class): the folded
         // quarantine line count across batch dirs.
         val nBad = s.read.text(s"$root/bad").count()
@@ -2064,18 +1879,8 @@ object StreamQueries {
         val tag = graft.Tables.dirTag(d)
         val srcDir = sharedLineitemDump(s, d)
         val root = s"${graft.Tables.scratchRoot}/graft_sprof_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => profileBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => profileBatch(b, root, id))
         val folds = ExtraQueries.ProfileNumCols.map(_._1)
           .flatMap { nm => Seq(
             sum(col(s"nn_$nm")).as(s"nn_$nm"),
@@ -2110,18 +1915,8 @@ object StreamQueries {
         ensureStreamDump(d, "embeddings", srcDir)(
           graft.Tables.t(s, d, "embeddings"))
         val root = s"${graft.Tables.scratchRoot}/graft_sembdrift_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => embDriftBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => embDriftBatch(b, root, id))
         VectorQueries.embDriftReport(s.read.parquet(s"$root/grid")
           .groupBy("label", "dim")
           .agg(sum("sr").as("sr"), sum("nr").as("nr"),
@@ -2143,18 +1938,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_surl_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => urlBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => urlBatch(b, root, id))
         s.read.parquet(s"$root/url")
           .groupBy("curl", "url")
           .agg(min("min_doc").as("min_doc"), sum("n").as("n"))
@@ -2180,18 +1965,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_scascade_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cascadeBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => cascadeBatch(b, root, id))
         TextQueries.cascadeFunnel(s.read.parquet(s"$root/cascade")
           .agg(sum("n").as("n"), sum("d1").as("d1"),
             sum("d2").as("d2"), sum("d3").as("d3")))
@@ -2213,18 +1988,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sdrift_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => driftBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => driftBatch(b, root, id))
         val f = s.read.parquet(s"$root/drift")
           .groupBy("event_type", "day", "bin").agg(sum("cnt").as("cnt"))
         val md = f.agg(min("day")).head().getLong(0)
@@ -2254,18 +2019,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_sdsir_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => dsirBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => dsirBatch(b, root, id))
         val bc = s.read.parquet(s"$root/dsir")
           .groupBy("bkt").agg(sum("ct").as("ct"), sum("cr").as("cr"))
         val n = bc.agg(sum("ct"), sum("cr")).head()
@@ -2305,18 +2060,8 @@ object StreamQueries {
         ensureStreamDump(d, "documents", srcDir)(
           graft.Tables.t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_scms_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => cmsBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => cmsBatch(b, root, id))
         ExtraQueries.cmsAudit(s, d, s.read.parquet(s"$root/cms")
           .groupBy("dep", "bkt").agg(sum("cnt").as("cnt")))
       },
@@ -2340,18 +2085,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_sbm_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => bitmapBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => bitmapBatch(b, root, id))
         s.read.parquet(s"$root/bm")
           .groupBy("day").agg(expr("bm_union(users_bm)").as("users_bm"))
           .withColumn("week", expr("day div 7"))
@@ -2380,18 +2115,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_src_${tag}_v$DumpVersion"
         ensureStreamDump(d, "events", srcDir)(graft.Tables.events(s, d))
         val root = s"${graft.Tables.scratchRoot}/graft_stheta_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => thetaBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => thetaBatch(b, root, id))
         val merged = ExtraQueries.thetaKmv(
           s.read.parquet(s"$root/kmv")
             .select(col("event_type"), explode(col("mins")).as("h"))
@@ -2424,18 +2149,8 @@ object StreamQueries {
         val srcDir = s"${graft.Tables.scratchRoot}/graft_stream_docs_${tag}_v$DumpVersion"
         ensureStreamDump(d, "documents", srcDir)(t(s, d, "documents"))
         val root = s"${graft.Tables.scratchRoot}/graft_stopk_$tag"
-        graft.sink.SnapshotSwap.rm(java.nio.file.Paths.get(root))
-        val schema = s.read.parquet(srcDir).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-        withStreamGateConfs(s) {
-          val sink: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            Long) => Unit = (b, id) => topkSketchBatch(b, root, id)
-          val q = stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runBatches(s, oneFilePerBatch(s, srcDir), root)(
+          (b, id) => topkSketchBatch(b, root, id))
         val sk = s.read.parquet(s"$root/sketch")
         // One token count per batch (repeated on every summary row;
         // present even for an empty summary — see topkSketchBatch).
@@ -2507,11 +2222,7 @@ object StreamQueries {
             |c_ts >= v_ts - INTERVAL 1 HOUR AND
             |c_ts <= v_ts + INTERVAL 1 HOUR""".stripMargin))
         val qn = "graft_sj_" + math.abs(d.hashCode).toString
-        withStreamGateConfs(s) {
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runToMemory(s, joined, qn, "append")
         s.table(qn)
           .groupBy("event_id").agg(count(lit(1)).as("n_clicks"))
           .orderBy("event_id")
@@ -2552,11 +2263,7 @@ object StreamQueries {
         // session; 33 GB at 100x). The production shape is append mode
         // + watermark to a file sink, where state partitioning is the
         // throughput knob.
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runToMemory(s, stream, qn)
         s.table(qn)
           .select(col("user_id"),
             unix_micros(col("session_window.start")).as("session_start_us"),
@@ -2681,14 +2388,8 @@ object StreamQueries {
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .count()
-        var dropped = 0L
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          dropped = q.recentProgress.flatMap(_.stateOperators)
-            .map(_.numRowsDroppedByWatermark).sum
-        }
+        val dropped = runToMemory(s, stream, qn, "update").recentProgress
+          .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
         s.table(qn)
           .groupBy(date_format(col("window.start"),
               "yyyy-MM-dd HH:mm:ss").as("ws"), col("event_type"))
@@ -2732,11 +2433,7 @@ object StreamQueries {
             col("event_type"))
           .agg(count(lit(1)).as("n"), min("event_id").as("min_ev"),
             max("event_id").as("max_ev"))
-        withStreamGateConfs(s) {
-          val q = stream.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+        runToMemory(s, stream, qn)
         s.table(qn)
           .select(unix_micros(col("window.start")).as("win_start_us"),
             unix_micros(col("window.end")).as("win_end_us"),

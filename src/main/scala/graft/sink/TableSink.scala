@@ -30,7 +30,9 @@ object TableSink {
   private[graft] def syncPool: Int = poolOverride.getOrElse(math.max(1,
     sys.env.getOrElse("SPARK_GRAFT_SYNC_POOL", "8").toInt))
 
-  /** In-JVM A/B seam (tools.SyncPoolProbe) — env is fixed per JVM. */
+  /** In-JVM pool-size seam for specs (SyncPoolFailureSpec) — env is
+    * fixed per JVM. Pool-size A/B receipts: PLANS.md (bounded
+    * sync-write pool). */
   @volatile private[graft] var poolOverride: Option[Int] = None
 
   /** Run `f` over the table map on a bounded worker pool, preserving

@@ -944,11 +944,23 @@ class PlanQualitySpec extends SparkSpecBase {
   }
 
   test("q_stream_mix folds source-domain partials; no corpus re-scan") {
-    val p = planOf("q_stream_mix")
-    assert(p.contains("graft_smix") || p.contains("ExistingRDD"), p)
+    // r19 (the q_mix_epochs pattern): the total rides a whole-relation
+    // window over the source-domain fold inside ONE plan — no
+    // checkpoint, no crossJoin. The per-batch partial dir is the only
+    // scan; neither the corpus nor its stream dump re-enters.
+    val plan = SparkEntry.queries("q_stream_mix")(spark, dir)
+      .queryExecution.executedPlan
+    val p = plan.toString
+    val scans = collectNodes(plan).collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.mkString(",")
+    }
+    assert(scans.nonEmpty && scans.forall(_.contains("graft_smix_")),
+      s"scans=$scans\n$p")
     assert(!"documents\\.parquet".r.findAllIn(p).hasNext, p)
     assert(!p.contains("SortMergeJoin"), p)
-    assert(!p.contains("Window"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert(p.contains("Window"), p)
   }
 
   test("q_stream_pipeline: answer folds batch partials; no envelope re-scan") {

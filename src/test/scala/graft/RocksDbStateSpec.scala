@@ -12,13 +12,13 @@ package graft
   * watermark/late-data eviction (q_stream_late), sliding windows
   * (q_stream_sliding), and the batch session_window twin
   * (q_session_window) — by asserting result identity under both
-  * providers. The seam is `graft.stream.state.provider` (sysprop, read
-  * by withStreamGateConfs) / SPARK_GRAFT_STREAM_STATE_PROVIDER (env,
-  * for bench A/B). */
+  * providers. The seam is Spark's own session conf
+  * `spark.sql.streaming.stateStore.providerClass`, which the gate
+  * harness leaves untouched. */
 class RocksDbStateSpec extends SparkSpecBase {
 
   private val dir = "/root/testdata/sf0.001"
-  private val PropKey = "graft.stream.state.provider"
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -38,18 +38,16 @@ class RocksDbStateSpec extends SparkSpecBase {
           .collect().map(_.toString).sorted.toSeq
         assert(default.nonEmpty, s"$gate returned no rows")
         dropGateViews()
-        System.setProperty(PropKey, RocksDb)
         try {
-          val rocks = SparkEntry.queries(gate)(spark, dir)
-            .collect().map(_.toString).sorted.toSeq
+          val rocks = SparkEnv.withConfs(spark, Map(ProviderKey -> RocksDb)) {
+            SparkEntry.queries(gate)(spark, dir)
+              .collect().map(_.toString).sorted.toSeq
+          }
           assert(rocks.length == default.length,
             s"$gate row count differs: rocksdb ${rocks.length} vs ${default.length}")
           assert(rocks == default,
             s"$gate results differ between state store providers")
-        } finally {
-          System.clearProperty(PropKey)
-          dropGateViews()
-        }
+        } finally dropGateViews()
       }
     }
 }

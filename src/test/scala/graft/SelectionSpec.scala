@@ -86,6 +86,31 @@ class SelectionSpec extends SparkSpecBase {
     }
   }
 
+  test("groupedKth rejects a negative weight and counts a null weight as 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val neg = Seq(("a", 1L, 2L), ("a", 2L, -1L), ("b", 5L, 1L))
+      .toDF("g", "v", "wt")
+    val err = intercept[IllegalArgumentException] {
+      Selection.groupedKth(neg, "g", "v", Map("a" -> Seq(1L)),
+        weight = col("wt"))
+    }
+    assert(err.getMessage.contains("non-negative"), err.getMessage)
+    // Null weights: the value 1 carries no weight, so rank 1 is the
+    // smallest value with positive weight, and the group's total
+    // weight (3) bounds the ranks. An all-null group has weight 0.
+    val nul = Seq[(String, Long, Option[Long])](
+      ("a", 1L, None), ("a", 2L, Some(1L)), ("a", 3L, Some(2L)),
+      ("b", 7L, None)).toDF("g", "v", "wt")
+    val got = Selection.groupedKth(nul, "g", "v", Map("a" -> Seq(1L, 2L, 3L)),
+      weight = col("wt"))
+    assert(got("a") == Seq(2L, 3L, 3L), got)
+    intercept[IllegalArgumentException] {
+      Selection.groupedKth(nul, "g", "v", Map("b" -> Seq(1L)),
+        weight = col("wt"))
+    }
+  }
+
   test("groupedKth rejects buckets < 2 (no narrowing possible)") {
     import spark.implicits._
     val d = Seq(("a", 1L), ("a", 2L)).toDF("g", "v")
